@@ -247,13 +247,12 @@ NATIONALITIES: dict[str, str] = {
 
 
 def load_gazetteer_parquet(spark, path: str) -> list[tuple]:
-    """SMALL-table path: collect gazetteer rows to the driver for
-    ``set_gazetteer`` (closure broadcast).  Only for dictionaries that fit
-    driver memory comfortably (tests, curated subsets).
+    """Collect gazetteer rows to the driver.  Only for dictionaries that
+    fit driver memory comfortably (tests, curated subsets).
 
-    The SCALE path does not collect: build the tagger parquet with
+    Tagging does not collect: build the tagger parquet with
     ``sources.gazetteer_etl.build_tagger_parquet`` and point workers at it
     via ``extract(gazetteer_parquet=...)`` / ``set_gazetteer_parquet`` —
-    each executor reads the artifact directly (gazetteer/store.py)."""
+    each executor maps its mmap artifact (gazetteer/mmapstore.py)."""
     rows = spark.read.parquet(path).collect()
     return [tuple(r) for r in rows]

@@ -36,10 +36,10 @@ _EDGE_PUNCT_SET = frozenset(_EDGE_PUNCT)
 
 
 # bump when tokenization/normalization SEMANTICS change (NFKC fold, CJK
-# per-char, Arabic variant fold + light stem...).  Tagger parquets record
-# the version they were normalized with; the runtime index refuses an
-# artifact built under different semantics — silent mismatches would just
-# stop matching (store.ParquetGazetteerIndex checks this).
+# per-char, Arabic variant fold + light stem...).  Tagger and taxcat
+# parquets record the version they were normalized with; the mmap build
+# and open refuse one made under different semantics — silent mismatches
+# would just stop matching (mmapstore checks this).
 NORMALIZATION_VERSION = 2   # v2: round-2 Arabic light stem
 
 
@@ -213,11 +213,11 @@ class PhraseIndex:
     def __init__(self, entries: list[tuple[str, object]]):
         """entries: (phrase, payload); phrases normalize at build time.
 
-        Layout (shared with store.ParquetGazetteerIndex, which measured ~30%
-        faster than the round-1 nested tuple-keyed dicts): one flat dict
-        keyed by the space-joined normalized phrase, plus a per-first-token
-        max phrase length so the scan's inner loop is bounded by THAT
-        token's longest dictionary phrase, not the global max."""
+        Layout (measured ~30% faster than the round-1 nested tuple-keyed
+        dicts): one flat dict keyed by the space-joined normalized phrase,
+        plus a per-first-token max phrase length so the scan's inner loop
+        is bounded by THAT token's longest dictionary phrase, not the
+        global max."""
         self.index: dict[str, list] = {}
         self.first_max: dict[str, int] = {}
         self.max_len = 1
@@ -276,9 +276,8 @@ CANDIDATE_CAP = 500
 def _cap_places(places: list) -> list:
     if len(places) <= CANDIDATE_CAP:
         return places
-    # stable sort on bias only: ties keep source order, which is the SAME
-    # underlying artifact order in the parquet and mmap paths — the three
-    # index kinds cap to the same candidate set
+    # stable sort on bias only: ties keep source order, as the mmap
+    # artifact's cap does — both index kinds cap to the same candidate set
     return sorted(places, key=lambda p: -p.id_bias)[:CANDIDATE_CAP]
 
 
@@ -305,30 +304,24 @@ def _longest_dominant_right(matches):
 
 # --- gazetteer index (lazy process singleton — executor 'pump priming') -----
 
-_GAZ_INDEX = None                     # PhraseIndex | ParquetGazetteerIndex
-_GAZ_ROWS: list[tuple] | None = None
-_GAZ_PATH: str | None = None
-
-
-def set_gazetteer(rows: list[tuple]) -> None:
-    """Swap in external gazetteer rows (broadcast value) before first tag."""
-    global _GAZ_ROWS, _GAZ_INDEX, _GAZ_PATH
-    _GAZ_ROWS = rows
-    _GAZ_PATH = None
-    _GAZ_INDEX = None
+_GAZ_INDEX = None                     # PhraseIndex | MmapGazetteerIndex
+_GAZ_PATH: str | None = None          # mmap artifact; None = embedded
 
 
 def set_gazetteer_parquet(path: str | None) -> None:
-    """Scale path: point this worker process at a tagger parquet (built by
-    ``sources.gazetteer_etl.build_tagger_parquet``).  The index builds
-    lazily ONCE per process from the local/shared file — no driver collect,
-    no broadcast of rows through the JVM.  Idempotent per path (called from
-    every Arrow batch of ``pipeline.extract``)."""
-    global _GAZ_PATH, _GAZ_ROWS, _GAZ_INDEX
+    """Point this worker process at an external gazetteer: a tagger
+    parquet (``sources.gazetteer_etl.build_tagger_parquet``) or its mmap
+    artifact.  A parquet resolves to its artifact (``mmapstore.resolve``);
+    the index opens lazily ONCE per process — no driver collect, no
+    broadcast of rows through the JVM.  ``None`` resets to the embedded
+    gazetteer.  Idempotent per path (called from every Arrow batch of
+    ``pipeline.extract``)."""
+    global _GAZ_PATH, _GAZ_INDEX
+    from .mmapstore import resolve
+    path = resolve(path, "gazetteer")
     if path == _GAZ_PATH:
         return
     _GAZ_PATH = path
-    _GAZ_ROWS = None
     _GAZ_INDEX = None
 
 
@@ -336,16 +329,12 @@ def gaz_index():
     global _GAZ_INDEX
     if _GAZ_INDEX is None:
         if _GAZ_PATH is not None:
-            from .mmapstore import MmapGazetteerIndex, is_mmap_artifact
-            if is_mmap_artifact(_GAZ_PATH):
-                # shared-memory scale path: page-cache-shared per node
-                _GAZ_INDEX = MmapGazetteerIndex(_GAZ_PATH)
-            else:
-                from .store import ParquetGazetteerIndex
-                _GAZ_INDEX = ParquetGazetteerIndex(_GAZ_PATH)
+            # shared-memory scale path: page-cache-shared per node
+            from .mmapstore import MmapGazetteerIndex
+            _GAZ_INDEX = MmapGazetteerIndex(_GAZ_PATH)
         else:
-            rows = _GAZ_ROWS if _GAZ_ROWS is not None else data.GAZETTEER_ROWS
-            _GAZ_INDEX = PhraseIndex([(r[1], Place(*r)) for r in rows])
+            _GAZ_INDEX = PhraseIndex([(r[1], Place(*r))
+                                      for r in data.GAZETTEER_ROWS])
             # O6 candidate cap on the in-memory path (see CANDIDATE_CAP)
             for key, places in _GAZ_INDEX.index.items():
                 if len(places) > CANDIDATE_CAP:
@@ -449,71 +438,35 @@ def _apply_tag_filters(cand: PlaceCandidate, lowercase_doc: bool) -> None:
 
 # --- taxcat-style lexicons (T4): person / org / nationality ------------------
 
-_TAX_INDEX: PhraseIndex | None = None
-_TAX_PATH: str | None = None
+_TAX_INDEX = None                     # PhraseIndex | MmapTaxcatIndex
+_TAX_PATH: str | None = None          # mmap artifact; None = embedded
 
 
 def set_taxcat_parquet(path: str | None) -> None:
     """Scale path for the reference's taxcat core (JRC entities, person
     names, WFB — solr/build.sh:24-57, TaxonMatcher.java:69-85): point this
     worker at a taxcat parquet built by
-    ``sources.taxcat_etl.build_taxcat_parquet``.  The index builds lazily
-    once per process from the file — no driver collect.  ``None`` resets
+    ``sources.taxcat_etl.build_taxcat_parquet``, or its mmap artifact.  A
+    parquet resolves to its artifact (``mmapstore.resolve``); the index
+    opens lazily once per process — no driver collect.  ``None`` resets
     to the embedded lexicons (reused python workers must not leak a
     previous job's table).  Idempotent per path."""
     global _TAX_PATH, _TAX_INDEX
+    from .mmapstore import resolve
+    path = resolve(path, "taxcat")
     if path == _TAX_PATH:
         return
     _TAX_PATH = path
     _TAX_INDEX = None
 
 
-def _tax_index_from_parquet(path: str) -> PhraseIndex:
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-
-    meta_path = os.path.join(path, "_normalization.json")
-    if not os.path.exists(meta_path):
-        raise ValueError(f"taxcat parquet {path} has no _normalization.json "
-                         f"sidecar — rebuild with build_taxcat_parquet")
-    with open(meta_path) as fh:
-        ver = json.load(fh).get("normalization_version")
-    if ver != NORMALIZATION_VERSION:
-        raise ValueError(f"taxcat parquet {path} normalized with version "
-                         f"{ver}, engine expects {NORMALIZATION_VERSION}")
-    tbl = pq.read_table(path, columns=["phrase", "kind",
-                                       "canonical", "cc", "valid"])
-    idx = PhraseIndex([])
-    index, first_max = idx.index, idx.first_max
-    # phrases are pre-normalized at ETL time (same contract as the tagger
-    # parquet): index build is pure dict assembly, no re-tokenization
-    for phrase, kind, canonical, cc, valid in zip(
-            tbl.column("phrase").to_pylist(), tbl.column("kind").to_pylist(),
-            tbl.column("canonical").to_pylist(), tbl.column("cc").to_pylist(),
-            tbl.column("valid").to_pylist()):
-        if not valid or not phrase:
-            continue
-        ntoks = phrase.count(" ") + 1
-        idx.max_len = max(idx.max_len, ntoks)
-        ft = phrase.split(" ", 1)[0]
-        if ntoks > first_max.get(ft, 0):
-            first_max[ft] = ntoks
-        index.setdefault(phrase, []).append((kind, canonical, cc or None))
-    return idx
-
-
-def tax_index() -> PhraseIndex:
+def tax_index():
     global _TAX_INDEX
     if _TAX_INDEX is None:
         if _TAX_PATH is not None:
-            from .mmapstore import MmapTaxcatIndex, is_tax_mmap
-            if is_tax_mmap(_TAX_PATH):
-                # shared-memory scale path (page cache shared per node)
-                _TAX_INDEX = MmapTaxcatIndex(_TAX_PATH)
-            else:
-                _TAX_INDEX = _tax_index_from_parquet(_TAX_PATH)
+            # shared-memory scale path (page cache shared per node)
+            from .mmapstore import MmapTaxcatIndex
+            _TAX_INDEX = MmapTaxcatIndex(_TAX_PATH)
             return _TAX_INDEX
         entries: list[tuple[str, object]] = []
         for n in data.PERSON_NAMES:

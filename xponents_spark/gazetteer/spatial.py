@@ -55,28 +55,21 @@ class SpatialIndex:
         return [(d, p) for d, _pid, p in top]
 
 
-_INDEX = None          # SpatialIndex | store.CompactSpatialIndex
-_INDEX_SRC = None      # what the cached index was built from
+_INDEX = None          # SpatialIndex | mmapstore.MmapSpatialIndex
+_INDEX_SRC = None      # the gazetteer artifact it serves; None = embedded
 
 
 def spatial_index():
     global _INDEX, _INDEX_SRC
     from . import matcher
-    src = matcher._GAZ_PATH or matcher._GAZ_ROWS or data.GAZETTEER_ROWS
-    if _INDEX is None or _INDEX_SRC is not src:
-        if matcher._GAZ_PATH is not None:
-            from .mmapstore import MmapSpatialIndex, is_mmap_artifact
-            if is_mmap_artifact(matcher._GAZ_PATH):
-                # shared-memory scale path: grid lives in the mmap artifact
-                _INDEX = MmapSpatialIndex(matcher._GAZ_PATH)
-            else:
-                # scale path: array-backed grid from the tagger parquet
-                from .store import CompactSpatialIndex
-                _INDEX = CompactSpatialIndex(matcher._GAZ_PATH)
+    src = matcher._GAZ_PATH
+    if _INDEX is None or _INDEX_SRC != src:
+        if src is not None:
+            # shared-memory scale path: grid lives in the mmap artifact
+            from .mmapstore import MmapSpatialIndex
+            _INDEX = MmapSpatialIndex(src)
         else:
-            rows = matcher._GAZ_ROWS if matcher._GAZ_ROWS is not None \
-                else data.GAZETTEER_ROWS
-            _INDEX = SpatialIndex([Place(*r) for r in rows])
+            _INDEX = SpatialIndex([Place(*r) for r in data.GAZETTEER_ROWS])
         _INDEX_SRC = src
     return _INDEX
 

@@ -145,9 +145,10 @@ def build_tagger_parquet(taggable: DataFrame, path: str) -> None:
 
     Appends ``phrase`` — the name normalized by the MATCHER'S OWN
     tokenization (``tokens_with_offsets``: NFKC fold, per-char CJK, Arabic
-    variant fold), so index build on each executor is pure dict assembly
-    with zero re-normalization.  The equivalent of the reference's Solr
-    index build step (solr/build.sh) emitting the FST artifact.
+    variant fold), so the mmap artifact build (``gazetteer.mmapstore``,
+    once per parquet) is a pure sort with zero re-normalization.  The
+    equivalent of the reference's Solr index build step (solr/build.sh)
+    emitting the FST artifact.
 
     Normalization is python (unicodedata), so it runs as one Arrow-batched
     mapInPandas over the ETL output — a one-time ETL cost (the reference
@@ -177,7 +178,7 @@ def build_tagger_parquet(taggable: DataFrame, path: str) -> None:
     out = taggable.mapInPandas(add_phrase, schema=schema)
     out.filter("phrase != ''").write.mode("overwrite").parquet(path)
 
-    # sidecar fingerprint: the runtime index refuses artifacts whose phrase
+    # sidecar fingerprint: the mmap build refuses a parquet whose phrase
     # column was normalized under different semantics
     import json
     import os
